@@ -171,12 +171,12 @@ def _digest(pairs):
 ES_MIX = {"load": 0.7, "page": 0.1, "replay": 0.1, "append": 0.1}
 
 
-def eventstore(seed, out_dir, aggregates, ops_per_pass, passes, append_commits):
+def eventstore(seed, out_dir, aggregates, n_ops, append_commits):
     """The bulk log (``bulk.parquet``), one commits file per append op
-    (``append_<k>.parquet``), ``ops.tsv``: one op per line with the answer
-    the generator predicts, over ``passes`` consecutive passes of
-    ``ops_per_pass`` ops in the fixed mix ``ES_MIX``, and ``meta.json``: the
-    bulk log's event count and generated user bytes."""
+    (``append_<k>.parquet``), ``ops.tsv``: the ``n_ops`` ops of the fixed mix
+    ``ES_MIX`` in a seeded order, one per line with the answer the generator
+    predicts, and ``meta.json``: the bulk log's event count and generated
+    user bytes."""
     rng = np.random.default_rng([seed, 3])
     os.makedirs(out_dir, exist_ok=True)
     log = _Log(rng)
@@ -208,16 +208,13 @@ def eventstore(seed, out_dir, aggregates, ops_per_pass, passes, append_commits):
             return recent[int(rng.integers(0, len(recent)))]
         return ids[rank[rng.choice(aggregates, p=zipf_p)]]
 
-    kinds = []
-    for _ in range(passes):
-        counts = {k: int(round(v * ops_per_pass)) for k, v in ES_MIX.items()}
-        counts["load"] += ops_per_pass - sum(counts.values())
-        block = [k for k, n in counts.items() for _ in range(n)]
-        rng.shuffle(block)
-        kinds.extend(block)
+    counts = {k: int(round(v * n_ops)) for k, v in ES_MIX.items()}
+    counts["load"] += n_ops - sum(counts.values())
+    kinds = [k for k, n in counts.items() for _ in range(n)]
+    rng.shuffle(kinds)
 
     lines, n_append = [], 0
-    for i, kind in enumerate(kinds):
+    for kind in kinds:
         if kind == "load":
             aid = pick_id()
             evs = log.events[aid]
@@ -257,8 +254,8 @@ def eventstore(seed, out_dir, aggregates, ops_per_pass, passes, append_commits):
             recent = list(dict.fromkeys(batch))
             lines.append(["append", name, log.user_bytes - before])
     with open(f"{out_dir}/ops.tsv", "w") as f:
-        for i, l in enumerate(lines):
-            f.write("\t".join([str(i // ops_per_pass)] + [str(x) for x in l]) + "\n")
+        for l in lines:
+            f.write("\t".join(str(x) for x in l) + "\n")
     meta = {"bulk_events": bulk_events, "bulk_user_bytes": bulk_user_bytes}
     with open(f"{out_dir}/meta.json", "w") as f:
         json.dump(meta, f, sort_keys=True)

@@ -7,8 +7,8 @@ sorted by name, row count, then one SHA-256 over ``str()`` of every cell,
 column by column, so a dropped row and a reordered one both fail. The
 registry-row inputs do not depend on the run's seed, so the expected hashes
 are computed once (``python3 perfbench/run.py --refresh-expected``) and kept
-in ``expected.json`` beside this file, with the digest of the tables they
-were computed on.
+in ``expected.json`` beside this file: per workload, the digest of the
+tables and the fingerprint of each row on them.
 """
 import glob
 import hashlib

@@ -12,11 +12,13 @@ harness from source with sbt (offline) and caches the classpath under
 
 Each run generates its inputs from the seed, starts one JVM with a local[4]
 Spark session and a single closed-loop client thread, sets up three times,
-runs the workload's fixed op list with tracing off, checks every output and
-prints a human-readable report followed by one JSON line: the end-to-end
-metrics (``--trace 0``) or the per-layer metrics of an extra traced pass
-(``--trace 1``). Traced runs also leave their spans and per-op records under
-``.perfbench_work/traces/`` for ``perfbench/delta.py``.
+runs the workload's fixed op list, checks every output and prints a
+human-readable report followed by one JSON line. With ``--trace 0`` that
+line holds the end-to-end metrics of untraced passes; with ``--trace 1`` the
+per-layer metrics of one pass run with the recorder attached, which is
+followed by an untraced pass to measure the tracing overhead. Traced runs
+also leave their spans and per-op records under ``.perfbench_work/traces/``
+for ``perfbench/delta.py``.
 """
 import argparse
 import hashlib
@@ -37,26 +39,32 @@ import oracle  # noqa: E402
 
 JOB_LIMIT_S = 170
 
-# Job-bound registry rows of the kind ROADMAP Directions 2-4 target:
-# AvailableNow drains, level folds, forget, pins and Par overlap.
-COMPOSED_ROWS = ["q_stream_forget", "g_dedup_cc_incr"]
-# Rows whose time goes to executor work: plans kernels (IntersectionSize,
-# PqKernels, CdcBoundaries) and the dedup/text/similarity operators.
-KERNEL_ROWS = ["g_containment", "g_knn_pq", "q_commit_split", "g_quality_bigram", "g_cdc_chunks"]
-
-# The registry-row tables: the sizes of the sf0.01 test tables, written
-# under a directory named sf0.01 because the engine picks its oracle-checked
-# arm (exact k-NN, the pinned recall sample) by that name. The tables come
-# from a fixed seed; the run's seed permutes the row order.
-SF001 = dict(docs=500, embeddings=500, events=10_000, users=150)
-SUITE_TABLE_SEED = 42
-
+# eventstore_ops runs its fixed op list once. A row workload runs its rows
+# `warmups` times untimed, then in at least `passes` timed passes and for at
+# least --seconds; row times keep falling over the first passes of a JVM
+# (JIT compilation), so timed passes start once the fall has slowed.
+#
+# The row tables come from a fixed seed (the run's seed permutes the row
+# order) and lie under a directory named sf0.01 whatever their size, because
+# the engine picks its oracle-checked arm (exact k-NN, the pinned recall
+# sample) by that name.
+#  - composed_rows: job-bound rows of the kind ROADMAP Directions 2-4 target
+#    (AvailableNow drains, connected-component level folds, pins, Par
+#    overlap) on half the documents of the sf0.01 test tables, so per-job
+#    overhead and driver time dominate even more.
+#  - kernel_rows: rows whose time goes to executor work (the PQ kernels of
+#    plans.PqKernels, the commit split), on tables the size of the sf0.1 test
+#    tables; on the sf0.01 sizes they are driver-bound too.
 WORKLOADS = {
-    "eventstore_ops": dict(aggregates=1000, ops_per_pass=26, passes=4, append_commits=20,
-                           min_passes=1),
-    "composed_rows": dict(rows=COMPOSED_ROWS, min_passes=1),
-    "kernel_rows": dict(rows=KERNEL_ROWS, min_passes=2),
+    "eventstore_ops": dict(aggregates=1000, ops=20, append_commits=20),
+    "composed_rows": dict(rows=["q_stream_cc", "g_dedup_cc_incr"], warmups=1, passes=2,
+                          tables=dict(docs=250, embeddings=250, events=5_000, users=150)),
+    "kernel_rows": dict(rows=["g_knn_pq", "q_commit_split"], warmups=2, passes=3,
+                        tables=dict(docs=5000, embeddings=2000, events=100_000, users=1500)),
 }
+# probe mode without --tables: tables the size of the sf0.01 test tables
+PROBE_TABLES = dict(docs=500, embeddings=500, events=10_000, users=150)
+TABLE_SEED = 42
 
 END_TO_END = [("setup_s", "s"), ("run_s", "s"), ("op_ms.p50", "ms"), ("peak_rss_mb", "MiB")]
 PER_LAYER = [
@@ -221,27 +229,23 @@ def main():
     try:
         cfg = WORKLOADS.get(a.workload, {})
         if a.workload == "eventstore_ops":
-            gen.eventstore(a.seed, inputs, cfg["aggregates"], cfg["ops_per_pass"], cfg["passes"],
-                           cfg["append_commits"])
-            res = run_jvm(cp, ["eventstore_ops", inputs, work, str(a.seconds), str(a.trace),
-                               str(cfg["min_passes"])], work, deadline)
+            gen.eventstore(a.seed, inputs, cfg["aggregates"], cfg["ops"], cfg["append_commits"])
+            res = run_jvm(cp, ["eventstore_ops", inputs, work, str(a.trace)], work, deadline)
         else:
             if a.rows == "all":
                 rows = gen.row_order(a.seed, registry_rows(cp, work))
             else:
                 rows = a.rows.split(",") if a.rows else gen.row_order(a.seed, cfg["rows"])
-            tables = os.path.abspath(a.tables) if a.tables else suite_tables(inputs)
-            res = run_jvm(cp, ["rows", tables, work, str(a.seconds), str(a.trace),
-                               str(cfg.get("min_passes", 1)), ",".join(rows)], work, deadline)
-            expected = oracle.load_expected()
-            missing = [r for r in rows if r not in expected["rows"]]
-            if a.tables:  # other tables: every kept answer is void, ask DuckDB
-                expected, missing = {"tables": None, "rows": {}}, rows
-            if missing:  # probe rows without a kept answer: ask DuckDB now
+            tables = os.path.abspath(a.tables) if a.tables else suite_tables(inputs, cfg.get("tables", PROBE_TABLES))
+            res = run_jvm(cp, ["rows", tables, work, str(a.trace), str(cfg.get("warmups", 1)),
+                               str(cfg.get("passes", 1)), str(a.seconds), ",".join(rows)], work, deadline)
+            digest = gen.digest(tables)
+            if a.workload:
+                expected = oracle.load_expected()[a.workload]
+            else:  # probe: ask DuckDB for every row's answer on these tables
                 with open(os.path.join(work, "oracle_sql.json")) as f:
                     sql = json.load(f)
-                expected["rows"].update(oracle.oracle_fingerprints(tables, {r: sql[r] for r in missing}))
-            digest = None if a.tables else gen.digest(tables)
+                expected = {"tables": digest, "rows": oracle.oracle_fingerprints(tables, sql)}
             for o in res["ops"]:  # every timed execution's output is checked
                 if o["ok"]:
                     out = os.path.join(work, "out", str(o["pass"]))
@@ -252,9 +256,9 @@ def main():
         shutil.rmtree(work, ignore_errors=True)
 
 
-def suite_tables(inputs):
+def suite_tables(inputs, sizes):
     tables = os.path.join(inputs, "sf0.01")
-    gen.suite_tables(SUITE_TABLE_SEED, tables, **SF001)
+    gen.suite_tables(TABLE_SEED, tables, **sizes)
     return tables
 
 
@@ -270,25 +274,31 @@ def refresh_expected():
     cp, _ = build()
     work = os.path.join(ROOT, ".perfbench_work", "refresh")
     shutil.rmtree(work, ignore_errors=True)
-    tables = suite_tables(work)
-    sql_file = os.path.join(work, "oracle_sql.json")
-    subprocess.run([java(), "-cp", cp, "perfbench.Main", "oracle-sql", sql_file,
-                    ",".join(COMPOSED_ROWS + KERNEL_ROWS)], check=True)
-    with open(sql_file) as f:
-        sql = json.load(f)
-    expected = {"tables": gen.digest(tables), "rows": oracle.oracle_fingerprints(tables, sql)}
+    expected = {}
+    for name, cfg in WORKLOADS.items():
+        if "rows" not in cfg:
+            continue
+        tables = suite_tables(os.path.join(work, name), cfg["tables"])
+        sql_file = os.path.join(work, "oracle_sql.json")
+        subprocess.run([java(), "-cp", cp, "perfbench.Main", "oracle-sql", sql_file, ",".join(cfg["rows"])],
+                       check=True)
+        with open(sql_file) as f:
+            sql = json.load(f)
+        expected[name] = {"tables": gen.digest(tables), "rows": oracle.oracle_fingerprints(tables, sql)}
+        log(f"perfbench: {len(sql)} rows of {name}")
     with open(oracle.EXPECTED, "w") as f:
         json.dump(expected, f, indent=1, sort_keys=True)
         f.write("\n")
     shutil.rmtree(work, ignore_errors=True)
-    log(f"perfbench: wrote {os.path.relpath(oracle.EXPECTED, ROOT)} for {len(sql)} rows")
+    log(f"perfbench: wrote {os.path.relpath(oracle.EXPECTED, ROOT)}")
 
 
 def report(name, a, res, base, work):
     ops = res["ops"]
     failed = [o for o in ops if not o["ok"]]
     attempted, n_failed = len(ops), len(failed)
-    good = [o for o in ops if o["ok"] and o["pass"] >= 0]  # pass -1 is a warm-up
+    # warm-up and traced ops are checked, but their times are not samples
+    good = [o for o in ops if o["ok"] and not o["pass"].startswith(("warmup", "traced"))]
     for o in failed[:5]:
         log(f"perfbench: FAILED {o['kind']} {o['name']} (pass {o['pass']}): {o['error']}")
 

@@ -49,29 +49,29 @@ final class EventStoreWorkload(spark: SparkSession, inputs: String) {
     * thrown exception propagates. */
   def run(op: Op, store: Store): Either[String, Unit] = op.kind match {
     case "load" =>
-      val id = unhex(op(2))
+      val id = unhex(op(1))
       val rows = Storage.readAggregate(spark, store.events, id).select("rev", "pos", "data").collect()
-      checkEvents(rows, op(3).toInt, op(4))
+      checkEvents(rows, op(2).toInt, op(3))
     case "page" =>
-      val id = unhex(op(2))
-      val key = if (op(3) == "-") None else { val Array(r, p) = op(3).split(":"); Some((r.toInt, p.toInt)) }
+      val id = unhex(op(1))
+      val key = if (op(2) == "-") None else { val Array(r, p) = op(2).split(":"); Some((r.toInt, p.toInt)) }
       val events = spark.read.parquet(store.events).filter(col("bucket") === Storage.bucketOf(id))
-      val rows = EventStoreOps.loadWithPaging(events, lit(id), key, op(4).toInt)
+      val rows = EventStoreOps.loadWithPaging(events, lit(id), key, op(3).toInt)
         .select("rev", "pos", "data").collect()
       val after = key.forall { k => rows.forall(r => ordering.gt((r.getInt(0), r.getInt(1)), k)) }
-      if (!after) Left(s"page holds a key not after ${op(3)}") else checkEvents(rows, op(5).toInt, op(6))
+      if (!after) Left(s"page holds a key not after ${op(2)}") else checkEvents(rows, op(4).toInt, op(5))
     case "replay" =>
-      val (et, lo, hi) = (op(2), op(3).toLong, op(4).toLong)
+      val (et, lo, hi) = (op(1), op(2).toLong, op(3).toLong)
       val rows = EventStoreOps.enumerateEventStore(spark.read.parquet(store.events),
           spark.read.parquet(store.index), Some(et), lo, hi)
         .select("ts", "data").collect()
       val marker = "\"t\":\"" + et + "\""
-      if (rows.length != op(5).toInt) Left(s"replay returned ${rows.length} events, want ${op(5)}")
+      if (rows.length != op(4).toInt) Left(s"replay returned ${rows.length} events, want ${op(4)}")
       else rows.find(r => r.getLong(0) < lo || r.getLong(0) > hi || !payload(r, 1).contains(marker))
         .map(r => Left(s"replay returned a foreign event: ${payload(r, 1).take(60)}"))
         .getOrElse(Right(()))
     case "append" =>
-      ingest(spark.read.parquet(s"$inputs/${op(2)}"), store)
+      ingest(spark.read.parquet(s"$inputs/${op(1)}"), store)
       Right(())
   }
 
@@ -94,13 +94,12 @@ object EventStoreWorkload {
   val Tenant = "bench"
   val Keyspace = "es"
 
-  /** One line of ops.tsv: pass, kind, then the kind's arguments and answer. */
+  /** One line of ops.tsv: the kind, then the kind's arguments and answer. */
   final case class Op(fields: IndexedSeq[String]) {
-    def pass: Int = fields(0).toInt
-    def kind: String = fields(1)
+    def kind: String = fields(0)
     def apply(i: Int): String = fields(i)
     /** Generated user bytes an append adds. */
-    def userBytes: Long = if (kind == "append") fields(3).toLong else 0L
+    def userBytes: Long = if (kind == "append") fields(2).toLong else 0L
   }
 
   private val ordering = Ordering.Tuple2[Int, Int]

@@ -1,9 +1,13 @@
 package perfbench
 
+import java.io.File
 import java.nio.file.{Files, Paths}
 
+import scala.collection.immutable.ListMap
 import scala.collection.mutable
 
+import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.module.scala.DefaultScalaModule
 import org.apache.spark.sql.SparkSession
 
 import graft.{GraftSession, SparkEntry}
@@ -11,21 +15,26 @@ import graft.{GraftSession, SparkEntry}
 /** The benchmark's JVM side. `run.py` generates the inputs, then calls
   *
   * {{{
-  * perfbench.Main <workload> <inputs> <work> <seconds> <trace> <passes> [row,row,...]
+  * perfbench.Main eventstore_ops <inputs> <work> <trace>
+  * perfbench.Main rows <inputs> <work> <trace> <warmups> <passes> <seconds> <row,row,...>
   * }}}
   *
-  * with workload `eventstore_ops` or `rows` (a list of registry rows, run in
-  * the given order). It sets up (three times, timed), then runs timed passes
-  * over the op list with tracing off, at least `passes` of them and until
-  * `seconds` have gone by; registry rows first run one untimed warm-up pass.
-  * With `trace = 1` the first pass's ops run once more with the recorder
-  * attached and once more without. It writes
-  * `<work>/result.json`; with tracing also `<work>/trace.jsonl` (one span
-  * per line). Event-store ops are checked here; registry-row outputs are
-  * written under `<work>/out/<pass>/<row>` for `run.py` to check. */
+  * The second form runs a list of registry rows in the given order. Each
+  * sets up three times, timed. Untraced, it then runs the workload's op
+  * list: `eventstore_ops` exactly once; registry rows `warmups` untimed
+  * passes, then at least `passes` timed passes and until `seconds` have gone
+  * by. Traced (`trace = 1`), the op list runs once with the recorder
+  * attached and once more without (after the warm-up passes, for rows). It
+  * writes `<work>/result.json`; with tracing also
+  * `<work>/trace.jsonl` (one span per line). Event-store ops are checked
+  * here; registry-row outputs are written under `<work>/out/<pass>/<row>`
+  * for `run.py` to check. */
 object Main {
   val Cores = 4
   val SetupRepeats = 3
+
+  type Obj = ListMap[String, Any]
+  val json: ObjectMapper = new ObjectMapper().registerModule(DefaultScalaModule)
 
   def session(work: String): SparkSession = {
     val spark = SparkSession.builder()
@@ -52,16 +61,15 @@ object Main {
         return
       case _ =>
     }
-    val Array(workload, inputs, work, seconds, trace, passes) = args.take(6)
-    val minPasses = passes.toInt
-    val rows = args.lift(6).map(_.split(",").toSeq.filter(_.nonEmpty)).getOrElse(Nil)
-    val result = workload match {
-      case "eventstore_ops" => eventStore(inputs, work, seconds.toDouble, minPasses, trace == "1")
-      case "rows" => registryRows(rows, inputs, work, seconds.toDouble, minPasses, trace == "1")
-      case other => sys.error(s"unknown workload $other")
+    val work = args(2)
+    val result = args.toSeq match {
+      case Seq("eventstore_ops", inputs, _, trace) => eventStore(inputs, work, trace == "1")
+      case Seq("rows", inputs, _, trace, warmups, passes, seconds, rows) =>
+        registryRows(rows.split(",").toSeq.filter(_.nonEmpty), inputs, work, trace == "1",
+          warmups.toInt, passes.toInt, seconds.toDouble)
+      case _ => sys.error(s"bad arguments: ${args.mkString(" ")}")
     }
-    Files.writeString(Paths.get(s"$work/result.json"),
-      Json(result :+ ("peak_rss_mb" -> peakRssMb())))
+    json.writeValue(new File(s"$work/result.json"), result + ("peak_rss_mb" -> peakRssMb()))
     SparkSession.getActiveSession.foreach(_.stop())
   }
 
@@ -75,37 +83,54 @@ object Main {
     (r, (System.nanoTime() - t0) / 1e9)
   }
 
-  /** One timed op: its kind, name, pass, milliseconds and outcome. */
-  final case class Timed(pass: Int, kind: String, name: String, ms: Double, error: Option[String]) {
-    def json: Json.Obj = Seq("pass" -> pass, "kind" -> kind, "name" -> name, "ms" -> ms,
-      "ok" -> error.isEmpty, "error" -> error)
+  /** One op as it ran: its pass (`warmup0`, ..., `0`, `1`, ..., `traced`
+    * or `untraced`), kind, name, milliseconds and outcome. */
+  final case class Timed(pass: String, kind: String, name: String, ms: Double, error: Option[String]) {
+    def ok: Boolean = error.isEmpty
+    def obj: Obj = ListMap("pass" -> pass, "kind" -> kind, "name" -> name, "ms" -> ms, "ok" -> ok,
+      "error" -> error)
   }
 
-  private def timed(pass: Int, kind: String, name: String)(body: => Either[String, Unit]): Timed = {
+  private def timed(pass: String, kind: String, name: String)(body: => Either[String, Unit]): Timed = {
     val t0 = System.nanoTime()
     val outcome = try body catch { case e: Throwable => Left(s"${e.getClass.getName}: ${e.getMessage}") }
     Timed(pass, kind, name, (System.nanoTime() - t0) / 1e6, outcome.left.toOption)
   }
 
-  /** The traced pass's counters, per-op records and spans. `untraced` runs
-    * the same ops once more without the recorder, after the traced pass, so
-    * both are equally warm; the difference is the tracing overhead. */
-  private def traced(spark: SparkSession, work: String, extra: () => Json.Obj)(
-      pass: Recorder => Unit, untraced: () => Unit): Json.Obj = {
+  /** Runs the op list once with the recorder attached (`pass`, which gets
+    * the recorder and the name of the pass) and once more without, so both
+    * passes start equally warm; the difference is the tracing overhead.
+    * Returns every op's record, the untraced pass's seconds as the run's
+    * only pass, the counters and the per-op records; writes the spans. */
+  private def traced(spark: SparkSession, work: String, extra: () => Obj)(
+      pass: (Option[Recorder], String) => Seq[Timed]): Obj = {
     val rec = new Recorder(spark)
     rec.attach()
-    val (_, s) = secondsOf(pass(rec))
+    val (tracedOps, s) = secondsOf(pass(Some(rec), "traced"))
     rec.detach()
     phase("traced pass done")
-    val (_, u) = secondsOf(untraced())
+    val (untracedOps, u) = secondsOf(pass(None, "untraced"))
     phase("untraced pass done")
     val w = Files.newBufferedWriter(Paths.get(s"$work/trace.jsonl"))
-    try rec.spans.foreach(sp => { w.write(Json(sp)); w.newLine() }) finally w.close()
-    Seq("trace" -> (Seq("traced_run_s" -> s, "untraced_run_s" -> u,
-      "driver.threads.max" -> rec.driverThreadsMax) ++ rec.counters() ++ extra()),
+    try rec.spans.foreach(sp => { w.write(json.writeValueAsString(sp)); w.newLine() }) finally w.close()
+    ListMap("pass_s" -> Seq(u), "ops" -> (tracedOps ++ untracedOps).map(_.obj),
+      "trace" -> (ListMap("traced_run_s" -> s, "untraced_run_s" -> u,
+        "driver.threads.max" -> rec.driverThreadsMax) ++ rec.counters() ++ extra()),
       "trace_ops" -> rec.opRecords)
   }
 
+  /** One op, inside the recorder's span when there is one; an output that
+    * fails its check marks the span failed. */
+  private def recorded(rec: Option[Recorder], pass: String, kind: String, name: String)(
+      body: => Either[String, Unit]): Timed = rec match {
+    case None => timed(pass, kind, name)(body)
+    case Some(r) =>
+      val t = timed(pass, kind, name)(r.op(kind, name)(body))
+      if (t.error.isDefined) r.markFailed()
+      t
+  }
+
+  /** Regular files under `path` and their total bytes. */
   private def diskUsage(path: String): (Long, Long) = {
     val p = Paths.get(path)
     if (!Files.exists(p)) (0L, 0L)
@@ -122,133 +147,116 @@ object Main {
     }.getOrElse(0.0) finally src.close()
   }
 
+  def median(xs: Seq[Double]): Double = {
+    val s = xs.sorted
+    if (s.size % 2 == 1) s(s.size / 2) else (s(s.size / 2 - 1) + s(s.size / 2)) / 2
+  }
+
   // -- eventstore_ops ------------------------------------------------------
 
-  def eventStore(inputs: String, work: String, seconds: Double, minPasses: Int,
-      trace: Boolean): Json.Obj = {
+  def eventStore(inputs: String, work: String, trace: Boolean): Obj = {
     val spark = session(work)
     phase("session up")
     val w = new EventStoreWorkload(spark, inputs)
-    // three identical stores: the timed passes run on the first; with tracing,
-    // the first pass's ops run again traced on the second and untraced on the
-    // third, all from the same starting state
+    // three identical stores: untraced, the op list runs once, on the first;
+    // traced, it runs with the recorder on the second and without on the
+    // third, both from the bulk-loaded state
     val setups = (0 until SetupRepeats).map { i =>
       val r = secondsOf(w.setup(s"$work/store$i"))
       phase(s"store $i loaded")
       r
     }
     val stores = setups.map(_._1)
+    val setupS = setups.map(_._2)
     phase("set-up done")
-    val meta = readCounts(s"$inputs/meta.json")
-    val (bulkFiles, bulkBytes) = diskUsage(stores(0).root)
+    val meta = json.readTree(new File(s"$inputs/meta.json"))
+    val bulkUserBytes = meta.get("bulk_user_bytes").asLong
 
-    val results = mutable.ArrayBuffer.empty[Timed]
-    var userBytes = meta("bulk_user_bytes")
-    val passes = w.ops.groupBy(_.pass).toSeq.sortBy(_._1)
-    val passSeconds = mutable.ArrayBuffer.empty[Double]
-    val t0 = System.nanoTime()
-    val it = passes.iterator
-    while (it.hasNext && (passSeconds.size < minPasses || (System.nanoTime() - t0) / 1e9 < seconds)) {
-      val (pass, ops) = it.next()
-      val (_, s) = secondsOf(ops.foreach { op =>
-        results += timed(pass, op.kind, op.kind)(w.run(op, stores(0)))
-        userBytes += op.userBytes
-      })
-      passSeconds += s
-      phase(s"pass $pass done")
+    def pass(rec: Option[Recorder], name: String, store: w.Store): Seq[Timed] = {
+      val out = w.ops.map(op => recorded(rec, name, op.kind, op.kind)(w.run(op, store)))
+      phase(s"pass $name done")
+      out
     }
-    val (files, bytes) = diskUsage(stores(0).root)
-    val base = Seq(
-      "setup_s" -> setups.map(_._2), "pass_s" -> passSeconds, "ops" -> results.map(_.json),
-      "space" -> Seq("bulk_files" -> bulkFiles, "bulk_bytes" -> bulkBytes,
-        "bulk_user_bytes" -> meta("bulk_user_bytes"), "files" -> files, "bytes" -> bytes,
-        "user_bytes" -> userBytes))
-    if (!trace) base
-    else {
-      val first = passes.head._2
-      val ingestRate = meta("bulk_events") / median(setups.map(_._2))
-      def store(): Json.Obj = {
+    if (!trace) {
+      val (bulkFiles, bulkBytes) = diskUsage(stores(0).root)
+      val (ops, s) = secondsOf(pass(None, "0", stores(0)))
+      val (files, bytes) = diskUsage(stores(0).root)
+      ListMap("setup_s" -> setupS, "pass_s" -> Seq(s), "ops" -> ops.map(_.obj),
+        "space" -> ListMap("bulk_files" -> bulkFiles, "bulk_bytes" -> bulkBytes,
+          "bulk_user_bytes" -> bulkUserBytes, "files" -> files, "bytes" -> bytes,
+          "user_bytes" -> (bulkUserBytes + w.ops.map(_.userBytes).sum)))
+    } else {
+      def store(): Obj = {
         val (f, b) = diskUsage(stores(1).root)
-        Seq("store.files_on_disk" -> f, "store.bytes_on_disk" -> b, "ingest.events_per_s" -> ingestRate)
+        ListMap("store.files_on_disk" -> f, "store.bytes_on_disk" -> b,
+          "ingest.events_per_s" -> meta.get("bulk_events").asLong / median(setupS))
       }
-      base ++ traced(spark, work, store _)({ rec =>
-        first.foreach { op =>
-          val out = try rec.op(op.kind, op.kind)(w.run(op, stores(1))) catch { case _: Throwable => Left("threw") }
-          if (out.isLeft) rec.markFailed()
-        }
-      }, () => first.foreach(op => timed(0, op.kind, op.kind)(w.run(op, stores(2)))))
+      ListMap("setup_s" -> setupS) ++ traced(spark, work, store _) { (rec, name) =>
+        pass(rec, name, if (rec.isDefined) stores(1) else stores(2))
+      }
     }
-  }
-
-  /** The integer fields of a flat JSON object (the generator's meta.json). */
-  private def readCounts(path: String): Map[String, Long] = {
-    val s = new String(Files.readAllBytes(Paths.get(path)), "UTF-8")
-    "\"([a-z_]+)\":\\s*(\\d+)".r.findAllMatchIn(s).map(m => m.group(1) -> m.group(2).toLong).toMap
-  }
-
-  def median(xs: Seq[Double]): Double = {
-    val s = xs.sorted
-    if (s.size % 2 == 1) s(s.size / 2) else (s(s.size / 2 - 1) + s(s.size / 2)) / 2
   }
 
   // -- registry rows -------------------------------------------------------
 
-  def oracleSql(rows: Seq[String]): String = Json(rows.map(r => r -> SparkEntry.oracleSql.getOrElse(r, null)))
+  def oracleSql(rows: Seq[String]): String =
+    json.writeValueAsString(ListMap(rows.map(r => r -> SparkEntry.oracleSql.getOrElse(r, null)): _*))
 
-  def registryRows(rows: Seq[String], inputs: String, work: String, seconds: Double,
-      minPasses: Int, trace: Boolean): Json.Obj = {
+  def registryRows(rows: Seq[String], inputs: String, work: String, trace: Boolean,
+      warmups: Int, minPasses: Int, seconds: Double): Obj = {
     val unknown = rows.filterNot(SparkEntry.queries.contains)
     require(unknown.isEmpty, s"unknown registry rows: ${unknown.mkString(",")}")
     Files.writeString(Paths.get(s"$work/oracle_sql.json"), oracleSql(rows))
     val tables = Seq("documents", "embeddings", "events")
     // set-up: a fresh local session, prepared, with every input table opened
     // and counted; the last one stays up for the run
-    val setups = (0 until SetupRepeats).map { _ =>
+    val setupS = (0 until SetupRepeats).map { _ =>
       SparkSession.getActiveSession.foreach(_.stop())
       secondsOf {
         val s = session(work)
-        tables.map(t => s.read.parquet(s"$inputs/$t.parquet").count()).sum
-      }
+        tables.foreach(t => s.read.parquet(s"$inputs/$t.parquet").count())
+      }._2
     }
     val spark = SparkSession.active
-    val inputRows = setups.head._1
+    phase("set-up done")
 
     // every execution writes its output (all columns computed, as with a
     // noop sink) to its own directory, and run.py checks every one of them
-    def run(name: String, out: String): Unit =
-      SparkEntry.queries(name)(spark, inputs).write.mode("overwrite").parquet(s"$work/out/$out/$name")
-    def settle(): Unit = { spark.catalog.clearCache(); System.gc() }
-    phase("set-up done")
-
-    val results = mutable.ArrayBuffer.empty[Timed]
-    def runPass(pass: Int): Double = rows.map { name =>
-      val r = timed(pass, "row", name) { run(name, pass.toString); Right(()) }
-      settle()
-      results += r
-      phase(s"pass $pass: $name")
-      r.ms / 1e3
-    }.sum
-    // pass -1 warms the JIT and Spark's caches; its outputs are checked but
-    // its times are not samples
-    runPass(-1)
-    val passSeconds = mutable.ArrayBuffer.empty[Double]
-    val t0 = System.nanoTime()
-    while (passSeconds.size < minPasses || (System.nanoTime() - t0) / 1e9 < seconds)
-      passSeconds += runPass(passSeconds.size)
-    val base = Seq("setup_s" -> setups.map(_._2), "pass_s" -> passSeconds, "ops" -> results.map(_.json))
-    if (!trace) base
-    else {
-      def store(): Json.Obj = {
-        val (f, b) = diskUsage(s"$work/tmp")
-        Seq("store.files_on_disk" -> f, "store.bytes_on_disk" -> b,
-          "ingest.events_per_s" -> inputRows / median(setups.map(_._2)))
+    def pass(rec: Option[Recorder], name: String): Seq[Timed] = rows.map { row =>
+      val r = recorded(rec, name, "row", row) {
+        SparkEntry.queries(row)(spark, inputs).write.mode("overwrite").parquet(s"$work/out/$name/$row")
+        Right(())
       }
-      base ++ traced(spark, work, store _)({ rec =>
-        rows.foreach { name =>
-          try rec.op("row", name)(run(name, "traced")) catch { case _: Throwable => () }
-          settle()
-        }
-      }, () => rows.foreach { name => timed(0, "row", name) { run(name, "untraced"); Right(()) }; settle() })
+      spark.catalog.clearCache()
+      System.gc()
+      phase(s"pass $name: $row")
+      r
+    }
+    // the warm-up passes fill the JIT and Spark's caches; their outputs are
+    // checked but their times are not samples
+    val warmup = (0 until warmups).flatMap(i => pass(None, s"warmup$i"))
+    val base = ListMap("setup_s" -> setupS)
+    if (!trace) {
+      val passes = mutable.ArrayBuffer.empty[Seq[Timed]]
+      val t0 = System.nanoTime()
+      while (passes.size < minPasses || (System.nanoTime() - t0) / 1e9 < seconds)
+        passes += pass(None, passes.size.toString)
+      base ++ ListMap("pass_s" -> passes.map(_.map(_.ms).sum / 1e3),
+        "ops" -> (warmup ++ passes.flatten).map(_.obj))
+    } else {
+      // what the traced pass leaves in java.io.tmpdir: the engine's stream
+      // checkpoints, generations and level stores; no events are ingested
+      val tmp = System.getProperty("java.io.tmpdir")
+      val before = diskUsage(tmp)
+      var after = before
+      def store(): Obj = ListMap("store.files_on_disk" -> (after._1 - before._1),
+        "store.bytes_on_disk" -> (after._2 - before._2), "ingest.events_per_s" -> 0.0)
+      val t = traced(spark, work, store _) { (rec, name) =>
+        val out = pass(rec, name)
+        if (rec.isDefined) after = diskUsage(tmp)
+        out
+      }
+      base ++ t + ("ops" -> (warmup.map(_.obj) ++ t("ops").asInstanceOf[Seq[Obj]]))
     }
   }
 }

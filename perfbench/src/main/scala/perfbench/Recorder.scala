@@ -1,5 +1,6 @@
 package perfbench
 
+import scala.collection.immutable.ListMap
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
@@ -163,7 +164,7 @@ final class Recorder(spark: SparkSession) {
   }
 
   /** Per-layer counters over a set of ops (all of them by default). */
-  def counters(sel: Op => Boolean = _ => true): Seq[(String, Any)] = lock {
+  def counters(sel: Op => Boolean = _ => true): ListMap[String, Any] = lock {
     val in = ops.filter(sel)
     val ids = in.map(_.id).toSet
     def inOp(t: Double) = opAt(t).exists(o => ids(o.id))
@@ -177,7 +178,7 @@ final class Recorder(spark: SparkSession) {
     val runMs = ts.map(_.runMs).sum
     def phase(k: String) = qs.flatMap(_.phases.get(k)).map(p => p._2 - p._1).sum
     val nTasks = ts.size
-    Seq(
+    ListMap(
       "spark.jobs" -> js.size, "spark.stages" -> stages.count(inOp), "spark.tasks" -> nTasks,
       "spark.tasks_per_job" -> (if (js.isEmpty) 0.0 else nTasks.toDouble / js.size),
       "driver.only_ms" -> driverOnly, "driver.only_share" -> (if (opMs > 0) driverOnly / opMs else 0.0),
@@ -206,26 +207,26 @@ final class Recorder(spark: SparkSession) {
   def driverThreadsMax: Int = peakThreads
 
   /** One record per op: its kind, name, duration, outcome and counters. */
-  def opRecords: Seq[Seq[(String, Any)]] = ops.toSeq.map { o =>
-    Seq("kind" -> o.kind, "name" -> o.name, "ms" -> (o.endMs - o.startMs), "ok" -> o.ok) ++
+  def opRecords: Seq[ListMap[String, Any]] = ops.toSeq.map { o =>
+    ListMap("kind" -> o.kind, "name" -> o.name, "ms" -> (o.endMs - o.startMs), "ok" -> o.ok) ++
       counters(_.id == o.id)
   }
 
   /** Every span, parent first: the run root, ops, jobs, planning phases,
     * micro-batches and pins. Times are epoch milliseconds. */
-  def spans: Seq[Seq[(String, Any)]] = lock {
+  def spans: Seq[ListMap[String, Any]] = lock {
     val rootStart = ops.headOption.map(_.startMs).getOrElse(0.0)
     val rootEnd = ops.lastOption.map(_.endMs).getOrElse(0.0)
     var next = 1L + ops.size
     def span(parent: Long, kind: String, name: String, s: Double, e: Double, extra: (String, Any)*) = {
       next += 1
-      Seq("id" -> next, "parent" -> parent, "kind" -> kind, "name" -> name,
+      ListMap[String, Any]("id" -> next, "parent" -> parent, "kind" -> kind, "name" -> name,
         "start_ms" -> s, "end_ms" -> e) ++ extra
     }
     def parentAt(t: Double) = opAt(t).map(_.id + 1L).getOrElse(0L)
-    val root = Seq(Seq("id" -> 0L, "parent" -> -1L, "kind" -> "run", "name" -> "run",
+    val root = Seq(ListMap[String, Any]("id" -> 0L, "parent" -> -1L, "kind" -> "run", "name" -> "run",
       "start_ms" -> rootStart, "end_ms" -> rootEnd))
-    val opSpans = ops.toSeq.map(o => Seq("id" -> (o.id + 1L), "parent" -> 0L, "kind" -> "op",
+    val opSpans = ops.toSeq.map(o => ListMap[String, Any]("id" -> (o.id + 1L), "parent" -> 0L, "kind" -> "op",
       "name" -> s"${o.kind}:${o.name}", "start_ms" -> o.startMs, "end_ms" -> o.endMs, "ok" -> o.ok))
     val jobSpans = jobs.values.toSeq.map(j => span(opOfJob(j).map(_.id + 1L).getOrElse(0L), "job",
       s"job ${j.id}", j.startMs, if (j.endMs.isNaN) j.startMs else j.endMs, "tagged" -> j.tag.isDefined))

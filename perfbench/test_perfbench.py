@@ -32,7 +32,7 @@ class GeneratorTest(unittest.TestCase):
 
     def _eventstore(self, seed, name):
         out = os.path.join(self.tmp, name)
-        gen.eventstore(seed, out, aggregates=300, ops_per_pass=40, passes=2, append_commits=5)
+        gen.eventstore(seed, out, aggregates=300, n_ops=40, append_commits=5)
         return gen.digest(out)
 
     def _tables(self, seed, name):
@@ -54,18 +54,18 @@ class GeneratorTest(unittest.TestCase):
 
     def test_op_mix_and_answers(self):
         out = os.path.join(self.tmp, "es")
-        gen.eventstore(3, out, aggregates=300, ops_per_pass=40, passes=2, append_commits=5)
+        gen.eventstore(3, out, aggregates=300, n_ops=40, append_commits=5)
         with open(os.path.join(out, "ops.tsv")) as f:
             ops = [l.rstrip("\n").split("\t") for l in f]
-        kinds = [o[1] for o in ops if o[0] == "0"]
+        kinds = [o[0] for o in ops]
         self.assertEqual(len(kinds), 40)
         self.assertEqual({k: kinds.count(k) for k in set(kinds)},
                          {"load": 28, "page": 4, "replay": 4, "append": 4})
         # a load after an append of the same aggregate sees the appended events
         counts = {}
         for o in ops:
-            if o[1] == "load":
-                counts.setdefault(o[2], []).append(int(o[3]))
+            if o[0] == "load":
+                counts.setdefault(o[1], []).append(int(o[2]))
         self.assertTrue(all(a <= b for c in counts.values() for a, b in zip(c, c[1:])))
 
 
